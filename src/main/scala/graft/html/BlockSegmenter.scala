@@ -66,7 +66,10 @@ object BlockSegmenter {
         val text = collapseWsStrip(raw.toString)
         if (text.nonEmpty) {
           val linkText = collapseWsStrip(linkRaw.toString)
-          val words = if (text.isEmpty) 0 else text.split(' ').length
+          // collapsed and trimmed: words are the single spaces plus one
+          var words = 1
+          var sp = text.indexOf(' ')
+          while (sp >= 0) { words += 1; sp = text.indexOf(' ', sp + 1) }
           blocks += Block(
             text = text,
             words = words,

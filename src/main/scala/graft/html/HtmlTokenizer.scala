@@ -28,21 +28,47 @@ object HtmlTokenizer {
     var stackTags = new Array[Int](64)
     val textBuf = new java.lang.StringBuilder(256)
     val decodeBuf = new java.lang.StringBuilder(8192)
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8.newDecoder() // strict
+    var chars = java.nio.CharBuffer.allocate(8192)
   }
   private val tlScratch: ThreadLocal[Scratch] =
     ThreadLocal.withInitial(() => new Scratch)
 
   /** UTF-8 decode dropping invalid sequences — the byte-level analog of
     * Python's `bytes.decode('utf-8', errors='ignore')` used throughout the
-    * reference (e.g. ocr_engine.py:309). Skips a UTF-8 BOM. */
+    * reference (e.g. ocr_engine.py:309). Skips a UTF-8 BOM.
+    *
+    * The JDK's strict UTF-8 decoder (bulk, ASCII-vectorized) decodes
+    * the input whole or reports it malformed. Decoding whole, the input
+    * was valid UTF-8 (it rejects the overlongs, surrogates and sequences
+    * above U+10FFFF the loop drops) and both decodes agree; otherwise
+    * the byte loop decides. */
   def decodeUtf8Ignore(bytes: Array[Byte]): String = {
+    if (bytes == null || bytes.isEmpty) return ""
+    val bom = if (hasBom(bytes)) 3 else 0
+    val scratch = tlScratch.get()
+    if (scratch.chars.capacity < bytes.length) // chars <= UTF-8 bytes
+      scratch.chars = java.nio.CharBuffer.allocate(bytes.length)
+    val out = scratch.chars
+    out.clear()
+    val dec = scratch.utf8.reset()
+    val in = java.nio.ByteBuffer.wrap(bytes, bom, bytes.length - bom)
+    if (dec.decode(in, out, true).isUnderflow && dec.flush(out).isUnderflow)
+      new String(out.array, 0, out.position)
+    else decodeUtf8IgnoreLoop(bytes)
+  }
+
+  private def hasBom(bytes: Array[Byte]): Boolean =
+    bytes.length >= 3 && (bytes(0) & 0xff) == 0xef &&
+      (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf
+
+  /** The byte loop of [[decodeUtf8Ignore]]. */
+  private[html] def decodeUtf8IgnoreLoop(bytes: Array[Byte]): String = {
     if (bytes == null || bytes.isEmpty) return ""
     val sb = tlScratch.get().decodeBuf
     sb.setLength(0)
     sb.ensureCapacity(bytes.length)
-    var i = 0
-    if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xef &&
-        (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf) i = 3
+    var i = if (hasBom(bytes)) 3 else 0
     val n = bytes.length
     while (i < n) {
       val b0 = bytes(i) & 0xff
@@ -76,7 +102,7 @@ object HtmlTokenizer {
     sb.toString
   }
 
-  private val NamedEntities: java.util.HashMap[String, String] = {
+  private[html] val NamedEntities: java.util.HashMap[String, String] = {
     val m = new java.util.HashMap[String, String](64)
     m.put("amp", "&"); m.put("lt", "<"); m.put("gt", ">")
     m.put("quot", "\""); m.put("apos", "'"); m.put("nbsp", " ")
@@ -96,13 +122,15 @@ object HtmlTokenizer {
     m
   }
 
-  /** Decode character references in `s[start,end)` into `out`. */
-  private def appendEntityDecoded(
+  /** Decode character references in `s[start,end)` into `out`; the runs
+    * between them are appended in bulk. */
+  private[html] def appendEntityDecoded(
       out: java.lang.StringBuilder, s: String, start: Int, end: Int): Unit = {
     var i = start
     while (i < end) {
-      val c = s.charAt(i)
-      if (c != '&') { out.append(c); i += 1 }
+      var amp = i // bounded scan: indexOf would run on past `end`
+      while (amp < end && s.charAt(amp) != '&') amp += 1
+      if (amp > i) { out.append(s, i, amp); i = amp }
       else {
         // find ';' within 32 chars
         var j = i + 1
@@ -203,21 +231,23 @@ object HtmlTokenizer {
     val textBuf = scratch.textBuf
 
     def flushText(endExclusive: Int): Unit = {
-      if (endExclusive > textStart) {
-        textBuf.setLength(0)
-        appendEntityDecoded(textBuf, doc, textStart, endExclusive)
+      if (endExclusive > textStart && b.nodeCount < MaxNodes) {
+        // entity-free text (the common case) is its own decoding
+        var text = doc
+        var from = textStart
+        var to = endExclusive
+        var amp = from
+        while (amp < to && doc.charAt(amp) != '&') amp += 1
+        if (amp < to) {
+          textBuf.setLength(0)
+          appendEntityDecoded(textBuf, doc, from, to)
+          text = textBuf.toString; from = 0; to = text.length
+        }
         // collapse all-whitespace runs into a single-space node
         // (preserves word separation across inline-tag boundaries)
-        var k = 0
-        var allWs = true
-        while (k < textBuf.length() && allWs) {
-          if (!Character.isWhitespace(textBuf.charAt(k))) allWs = false
-          k += 1
-        }
-        if (b.nodeCount < MaxNodes) {
-          if (allWs) b.addText(top, " ")
-          else b.addText(top, textBuf.toString)
-        }
+        var k = from
+        while (k < to && Character.isWhitespace(text.charAt(k))) k += 1
+        b.addText(top, if (k == to) " " else text.substring(from, to))
       }
     }
 
@@ -298,18 +328,22 @@ object HtmlTokenizer {
             }
           }
         } else { i += 1 } // stray '<'
-      } else i += 1
+      } else { // text: on to the next '<'
+        val next = doc.indexOf('<', i + 1)
+        i = if (next < 0) n else next
+      }
     }
     flushText(n)
     b.result()
   }
 
-  /** Case-insensitive indexOf for ASCII needles (close tags). */
+  /** Case-insensitive indexOf for close-tag needles ("</name"): only a
+    * '<' lowercases to '<', so only those positions are tried. */
   private def indexOfIgnoreCase(hay: String, needle: String, from: Int): Int = {
     val nh = hay.length
     val nn = needle.length
-    var i = math.max(0, from)
-    while (i + nn <= nh) {
+    var i = hay.indexOf('<', math.max(0, from))
+    while (i >= 0 && i + nn <= nh) {
       var j = 0
       var ok = true
       while (j < nn && ok) {
@@ -319,7 +353,7 @@ object HtmlTokenizer {
         j += 1
       }
       if (ok) return i
-      i += 1
+      i = hay.indexOf('<', i + 1)
     }
     -1
   }

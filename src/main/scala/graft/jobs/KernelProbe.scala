@@ -72,9 +72,9 @@ object KernelProbe {
     timed("fields") {
       var s = 0L
       texts.foreach { t =>
-        val lower = t.toLowerCase
-        val (docType, _, _) = graft.text.CardIntel.analyzeLower(t, lower, "standard_form")
-        s += graft.text.FieldExtractor.extractLower(t, lower, docType)._1.size
+        val p = graft.text.TextProfile(t)
+        val (docType, _, _) = graft.text.CardIntel.analyze(p, "standard_form")
+        s += graft.text.FieldExtractor.extract(p, docType, graft.text.FieldExtractor.DefaultRunYear)._1.size
       }
       s
     }

@@ -915,22 +915,26 @@ object PdfParser {
     } catch { case _: Exception => null }
   }
 
+  /** Inflate, capped at 64 MB; a truncated stream yields what inflated.
+    * A stream whose zlib header asks for a preset dictionary (FDICT) —
+    * which a PDF cannot supply — stops there too: `inflate` returns 0
+    * without needing input, so waiting for progress would spin. */
   private def inflate(data: Array[Byte]): Array[Byte] = {
+    val inf = new Inflater()
     try {
-      val inf = new Inflater()
       inf.setInput(data)
       val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 4))
       val buf = new Array[Byte](8192)
       var total = 0
-      while (!inf.finished() && total < (64 << 20)) {
+      while (!inf.finished() && !inf.needsDictionary() && total < (64 << 20)) {
         val n = inf.inflate(buf)
         if (n == 0 && inf.needsInput()) return out.toByteArray
         out.write(buf, 0, n)
         total += n
       }
-      inf.end()
       out.toByteArray
     } catch { case _: Exception => null }
+    finally inf.end()
   }
 
   // ------------------------------------------------------------------

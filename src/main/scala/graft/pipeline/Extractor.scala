@@ -4,15 +4,17 @@ import graft.model.{Analytics, CardAnalysis, ExtractResult, PageRow, QualityResu
 import graft.html.{BlockSegmenter, ContentClassifier, HtmlTokenizer, Segmentation}
 import graft.pdf.PdfParser
 import graft.text._
+import scala.util.control.NonFatal
 
 /** Per-row extraction kernel — the typed-map stage body (O1, the analog of
   * `IterativeOCREngine.process_image`, /root/reference/ocr_service/modules/
   * ocr_engine.py:1516-1618, and the escalation router O4,
   * open_source_ocr_stack.py:356-412).
   *
-  * Pure function PageRow → ExtractResult. All failures become status rows,
-  * never exceptions (ocr_engine.py:1610-1615) — one bad page must not kill
-  * a 10^12-row job.
+  * Pure function PageRow → ExtractResult. All non-fatal failures become
+  * status rows, never exceptions (ocr_engine.py:1610-1615) — one bad page
+  * must not kill a 10^12-row job. Fatal JVM errors (OutOfMemoryError,
+  * StackOverflowError, …) propagate: a row cannot stand for them.
   */
 object Extractor {
 
@@ -35,7 +37,7 @@ object Extractor {
       else
         extractHtml(row)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         failed(row, s"EXTRACTION_ERROR: ${e.getClass.getSimpleName}")
     }
   }
@@ -43,43 +45,39 @@ object Extractor {
   private def extractHtml(row: PageRow): ExtractResult = {
     val dom = HtmlTokenizer.parse(row.html)
     val seg = BlockSegmenter.segment(dom)
+    val layoutType = seg.layoutType
     val chain = scala.collection.mutable.ListBuffer.empty[String]
 
     // escalation ladder (O4): strict density classifier → all content →
     // full text; each layer evaluated structurally ("other": no doc-type
     // bonus yet, matching the router's pre-classification evaluation).
+    // Each layer's profile goes on to finish() with its text.
     chain += "layer1:density_classifier"
     val (mainBlocks, allBlocks, layersIdentical) =
       ContentClassifier.ladderLayers(seg.blocks)
-    val l1 = Sanitizer.sanitize(ContentClassifier.assemble(mainBlocks))
-    val q1 = Quality.evaluate(l1, "other")
+    val p1 = TextProfile(Sanitizer.sanitize(ContentClassifier.assemble(mainBlocks)))
 
-    var text = l1
-    var quality = q1
-    if (q1.classification != "GOOD") {
+    var profile = p1
+    if (Quality.evaluate(p1, "other").classification != "GOOD") {
       chain += "layer2:all_content"
       // layer 2 recomputes only when it actually differs from layer 1
-      val l2 = if (layersIdentical) l1
-        else Sanitizer.sanitize(ContentClassifier.assemble(allBlocks))
-      val q2 = if (layersIdentical) q1 else Quality.evaluate(l2, "other")
-      text = l2
-      quality = q2
-      if (q2.classification != "GOOD") {
+      val p2 = if (layersIdentical) p1
+        else TextProfile(Sanitizer.sanitize(ContentClassifier.assemble(allBlocks)))
+      profile = p2
+      if (p2.eq(p1) || Quality.evaluate(p2, "other").classification != "GOOD") {
         // escalate to full text for critical detected types or empty output.
         // NOTE: classification here runs on the pre-mark text; finish()
         // re-analyzes the marked final text (reference order, O4+C9).
-        val (detType, _, _) = CardIntel.analyze(l2, seg.layoutType)
-        if (CriticalDocTypes.contains(detType) || l2.isEmpty) {
+        val (detType, _, _) = CardIntel.analyze(p2, layoutType)
+        if (CriticalDocTypes.contains(detType) || p2.text.isEmpty) {
           chain += "layer3:full_text"
-          val l3 = Sanitizer.sanitize(
-            ContentClassifier.assemble(ContentClassifier.fullText(seg.blocks)))
-          text = l3
-          quality = Quality.evaluate(l3, "other")
+          profile = TextProfile(Sanitizer.sanitize(
+            ContentClassifier.assemble(ContentClassifier.fullText(seg.blocks))))
         }
       }
     }
 
-    finish(row, text, seg.layoutType, chain.toList)
+    finish(row, profile, layoutType, chain.toList)
   }
 
   private def extractPdf(row: PageRow): ExtractResult = {
@@ -101,7 +99,7 @@ object Extractor {
         else if (lines.size < 10 && maxShare > 0.4) "large_blocks"
         else "standard_form"
       }
-    finish(row, text, layout, List("pdf:xycut"))
+    finish(row, TextProfile(text), layout, List("pdf:xycut"))
   }
 
   /** Post-extraction analytics shared by both routes — classification (C2),
@@ -109,24 +107,22 @@ object Extractor {
     * readiness (C5/C6), analytics assembly (C7, routers/ocr.py:144-175). */
   private def finish(
       row: PageRow,
-      sanitizedText: String,
+      sanitized: TextProfile,
       layoutType: String,
       fallbackChain: List[String]): ExtractResult = {
     // the reference marks a suspicious trailing partial-card zero in EVERY
     // final text (T4; _build_response, ocr_engine.py:2112-2113)
-    val text = CardScore.markUncertainPartialCardTail(sanitizedText)
-    val lower = text.toLowerCase // shared across all keyword operators
-    // one fold-safety scan per document, shared by every indexOf-probe
-    // fast path (FieldExtractor gates, Quality/LangHints word matchers)
-    val foldSafe =
-      lower.length == text.length && !graft.text.hasFoldDivergent(text)
-    val (docType, typeConfRaw, cards) =
-      CardIntel.analyzeLower(text, lower, layoutType)
+    val text = CardScore.markCollapsedTail(sanitized.text)
+    // one scan per document: every operator below reads this profile
+    // (counts, lowercase copy, fold safety, keyword hits) and none
+    // rescans the text for them
+    val p = if (text eq sanitized.text) sanitized else TextProfile(text)
+    val (docType, typeConfRaw, cards) = CardIntel.analyze(p, layoutType)
     val typeConfidence = pyRound(typeConfRaw, 2)
-    val (fields, warnings) = FieldExtractor.extractLower(text, lower, docType,
-      FieldExtractor.DefaultRunYear, foldSafe)
-    val confidence = Confidence.calculateLower(text, lower)
-    val quality = Quality.evaluate(text, docType, Some(foldSafe))
+    val (fields, warnings) =
+      FieldExtractor.extract(p, docType, FieldExtractor.DefaultRunYear)
+    val confidence = Confidence.fromProfile(p)
+    val quality = Quality.evaluate(p, docType)
 
     val status =
       if (quality.classification == "GOOD") "OK"
@@ -154,7 +150,7 @@ object Extractor {
       text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toDouble /
         math.max(1, row.html.length), 4)
 
-    val (lang, country) = LangHints.detectLower(text, lower, foldSafe)
+    val (lang, country) = LangHints.detectLower(text, p.lower, p.foldSafe)
     // readability_index = clamped confidence, 4 dp (ocr_engine.py:2134)
     val readability = pyRound(math.max(0.0, math.min(1.0, confidence)), 4)
 

@@ -117,13 +117,13 @@ object Warc {
         ((b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18))
     if (n >= 2 && b(0) == 0x1f && b(1) == 0x8b) {
       val gz = new GzipMemberResyncStream(pb)
-      SniffedStream(new BufferedInputStream(gz, 1 << 16), Some(gz), None)
+      SniffedStream(new UnsyncBuffered(gz), Some(gz), None)
     } else if (isZstd) {
       val raw = new com.github.luben.zstd.ZstdInputStream(pb)
       raw.setContinuous(true) // read across frame boundaries
       val zst = new ZstdLenientStream(raw)
-      SniffedStream(new BufferedInputStream(zst, 1 << 16), None, Some(zst))
-    } else SniffedStream(pb, None, None)
+      SniffedStream(new UnsyncBuffered(zst), None, Some(zst))
+    } else SniffedStream(new UnsyncBuffered(pb), None, None)
   }
 
   /** Lazily parse all records from `in` (plain, gzip, or zstd —
@@ -174,17 +174,53 @@ object Warc {
     * WARC-Target-URI into downstream page keys), falling back to
     * ISO-8859-1 when the bytes are not valid UTF-8. */
   private def readLine(in: InputStream): String = {
-    val buf = new ByteArrayOutputStream(80)
+    val bytes = lineBuf.get()
+    var n = 0
+    var ascii = true
     var c = in.read()
     if (c < 0) return null
     while (c >= 0 && c != '\n') {
-      if (buf.size < MaxLineBytes) buf.write(c)
+      if (n < MaxLineBytes) { bytes(n) = c.toByte; n += 1; ascii &&= c < 0x80 }
       c = in.read()
     }
-    val bytes = buf.toByteArray
-    var n = bytes.length
     if (n > 0 && bytes(n - 1) == '\r') n -= 1
-    decodeHeaderBytes(bytes, n)
+    // an ASCII line decodes the same under UTF-8 and ISO-8859-1
+    if (ascii) new String(bytes, 0, n, ISO_8859_1) else decodeHeaderBytes(bytes, n)
+  }
+
+  /** [[readLine]]'s per-thread line buffer. */
+  private val lineBuf: ThreadLocal[Array[Byte]] =
+    ThreadLocal.withInitial(() => new Array[Byte](MaxLineBytes))
+
+  /** A BufferedInputStream without its lock: [[readLine]] reads a byte
+    * at a time, and BufferedInputStream takes a monitor per byte. */
+  private final class UnsyncBuffered(in: InputStream) extends InputStream {
+    private val buf = new Array[Byte](1 << 16)
+    private var pos = 0
+    private var lim = 0
+    private def fill(): Boolean = {
+      var n = 0
+      while (n == 0) n = in.read(buf, 0, buf.length)
+      pos = 0; lim = math.max(n, 0)
+      n > 0
+    }
+    override def read(): Int =
+      if (pos < lim || fill()) { val b = buf(pos) & 0xff; pos += 1; b } else -1
+    override def read(out: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0
+      else if (pos == lim && len >= buf.length) in.read(out, off, len)
+      else if (pos < lim || fill()) {
+        val n = math.min(len, lim - pos)
+        System.arraycopy(buf, pos, out, off, n)
+        pos += n
+        n
+      } else -1
+    override def skip(n: Long): Long =
+      if (n <= 0) 0L
+      else if (pos < lim) { val k = math.min(n, (lim - pos).toLong).toInt; pos += k; k }
+      else in.skip(n)
+    override def available(): Int = (lim - pos) + in.available()
+    override def close(): Unit = in.close()
   }
 
   /** UTF-8 strict decode with ISO-8859-1 fallback (lossless: every byte
@@ -374,9 +410,10 @@ object Warc {
 
   /** Inflate a gzip body, capped; (null, _) if the stream is corrupt. */
   private def gunzipCapped(b: Array[Byte],
-                           cap: Int): (Array[Byte], Boolean) =
+                           cap: Int): (Array[Byte], Boolean) = {
+    var in: GZIPInputStream = null // closed to free its Inflater now, not at GC
     try {
-      val in = new GZIPInputStream(new ByteArrayInputStream(b), 1 << 14)
+      in = new GZIPInputStream(new ByteArrayInputStream(b), 1 << 14)
       val out = new ByteArrayOutputStream(math.min(b.length * 3, cap))
       val buf = new Array[Byte](8192)
       var total = 0
@@ -391,6 +428,8 @@ object Warc {
       }
       (out.toByteArray, truncated)
     } catch { case _: Exception => (null, false) }
+    finally if (in != null) in.close()
+  }
 
   // ---------------------------------------------------------------- spark
 
@@ -798,7 +837,7 @@ object Warc {
   private def zstdFramedIterator(in: org.apache.hadoop.fs.FSDataInputStream,
       offset: Long, end: Long, maxPayload: Int): Iterator[WarcRecordRow] = {
     in.seek(offset)
-    val c = new CountingInputStream(new BufferedInputStream(in, 1 << 16))
+    val c = new CountingInputStream(new UnsyncBuffered(in))
     val sig = ZstdMarkerSig
     new Iterator[WarcRecordRow] {
       private var pending: Iterator[WarcRecordRow] = Iterator.empty
@@ -926,7 +965,7 @@ object Warc {
     } else {
       // plain: the record itself is the container unit; count consumed
       // bytes ABOVE the buffer so the parser's position is exact
-      val c = new CountingInputStream(new BufferedInputStream(in, 1 << 16))
+      val c = new CountingInputStream(new UnsyncBuffered(in))
       splitIterator(c, maxPayload, end,
         sync = () => syncToVersionLinePos(c, () => offset + c.count))
     }

@@ -69,11 +69,14 @@ object CardIntel {
 
   /** `_extract_card_candidates` — unique digit strings of length 11–19,
     * first-seen order. document_intelligence.py:307-321 */
-  def extractCardCandidates(text: String): List[String] = {
-    if (text == null) return Nil
-    // necessary condition: the pattern consumes ≥11 `\d` chars — skip
-    // the regex scan entirely on digit-poor text (identical results)
-    if (digitCount(text) < 11) return Nil
+  def extractCardCandidates(text: String): List[String] =
+    if (text == null) Nil else extractCardCandidates(text, TextProfile(text).cardSpanDigits)
+
+  private def extractCardCandidates(text: String, spanDigits: Int): List[String] = {
+    // necessary condition: a candidate is ≥11 BMP digits inside one run
+    // of digits, `\s`, '-' and astral chars — skip the regex scan
+    // entirely when no run holds that many (identical results)
+    if (spanDigits < 11) return Nil
     val m = cardPattern.matcher(text)
     val seen = scala.collection.mutable.LinkedHashSet.empty[String]
     while (m.find()) {
@@ -141,8 +144,11 @@ object CardIntel {
 
   /** Card analysis struct — `analyze` card portion,
     * document_intelligence.py:275-297. */
-  def cardAnalysis(text: String): CardAnalysis = {
-    val rows = extractCardCandidates(text).map { number =>
+  def cardAnalysis(text: String): CardAnalysis =
+    cardAnalysis(text, TextProfile(if (text == null) "" else text).cardSpanDigits)
+
+  private def cardAnalysis(text: String, spanDigits: Int): CardAnalysis = {
+    val rows = (if (text == null) Nil else extractCardCandidates(text, spanDigits)).map { number =>
       CardCandidate(
         masked = maskNumber(number),
         length = number.length,
@@ -169,15 +175,22 @@ object CardIntel {
   /** analyze() with a caller-provided lowercase copy (hot path: the
     * extractor shares one lowercased text across all operators). */
   def analyzeLower(text: String, lower: String, layoutType: String)
+      : (String, Double, CardAnalysis) =
+    analyze(TextProfile(text, lower), layoutType)
+
+  /** analyze() from the text's profile: its card-span digit count gates
+    * the card scan, and its keyword hits classify. */
+  def analyze(p: TextProfile, layoutType: String)
       : (String, Double, CardAnalysis) = {
-    val cards = cardAnalysis(text)
-    val (docType, conf) = classifyLower(lower, layoutType, cards)
+    val cards = cardAnalysis(p.text, p.cardSpanDigits)
+    val (docType, conf) = classifyHits(p.keywordHits, layoutType, cards)
     (docType, conf, cards)
   }
 
-  // One Aho-Corasick automaton over ALL keywords: presence semantics are
-  // identical to the reference's per-keyword `in` scans
-  // (document_intelligence.py:397-404) but need one text pass, not ~160.
+  // One Aho-Corasick automaton over ALL keywords, and Confidence's
+  // markers after them: presence semantics are identical to the
+  // reference's per-keyword `in` scans (document_intelligence.py:397-404)
+  // but need one text pass, not ~170.
   private val AllKeywordSets: List[Set[String]] = List(
     CardKeywords, InvoiceKeywords, ReceiptKeywords, IdKeywords,
     PassportKeywords, DriverLicenseKeywords, NationalIdKeywords,
@@ -187,7 +200,11 @@ object CardIntel {
   private val AllKeywords: IndexedSeq[String] =
     AllKeywordSets.flatten.distinct.toIndexedSeq
   private val KeywordId: Map[String, Int] = AllKeywords.zipWithIndex.toMap
-  private val Matcher = AhoCorasick.build(AllKeywords)
+  private val Matcher = AhoCorasick.build(AllKeywords ++ Confidence.Markers)
+  /** Id of Confidence's first marker in [[keywordHits]]. */
+  private[text] val MarkerBase: Int = AllKeywords.size
+  private[text] def keywordHits(lower: String): Array[Boolean] =
+    Matcher.matchedSet(lower)
   private val SetIds: Array[Array[Int]] =
     AllKeywordSets.map(_.map(KeywordId).toArray).toArray
 
@@ -197,23 +214,19 @@ object CardIntel {
       text: String,
       layoutType: String,
       cards: CardAnalysis): (String, Double) =
-    classifyLower((if (text == null) "" else text).toLowerCase, layoutType, cards)
+    classifyHits(keywordHits((if (text == null) "" else text).toLowerCase),
+      layoutType, cards)
 
-  def classifyLower(
-      lower: String,
+  private def classifyHits(
+      found: Array[Boolean],
       layoutType: String,
       cards: CardAnalysis): (String, Double) = {
-    val found = Matcher.matchedSet(lower)
-
     def scoreOf(setIdx: Int): Int = {
       val ids = SetIds(setIdx)
       var n = 0; var i = 0
       while (i < ids.length) { if (found(ids(i))) n += 1; i += 1 }
       n
     }
-    def keywordScore(kws: Set[String]): Int =
-      scoreOf(AllKeywordSets.indexOf(kws))
-    def hasAny(kws: Set[String]): Boolean = keywordScore(kws) > 0
 
     val hasCardKeyword = scoreOf(0) > 0
     val hasInvoiceKeyword = scoreOf(1) > 0

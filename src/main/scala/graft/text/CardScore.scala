@@ -98,11 +98,17 @@ object CardScore {
   }
 
   /** Replace suspicious trailing `0` with `?` (manual-review marker). */
-  def markUncertainPartialCardTail(text: String): String = {
-    val cleaned = collapseWsStrip(if (text == null) "" else text)
-    if (!hasSuspiciousPartialZeroTail(cleaned)) cleaned
+  def markUncertainPartialCardTail(text: String): String =
+    markCollapsedTail(collapseWsStrip(if (text == null) "" else text))
+
+  /** [[markUncertainPartialCardTail]] of a text that collapsing and
+    * stripping leaves unchanged — as `Sanitizer.sanitize` output always
+    * is (SanitizerSpec) — without that scan. */
+  def markCollapsedTail(cleaned: String): String =
+    // the tail first: only a text ending in '0' can be marked, and the
+    // full check collapses its input once more
+    if (!cleaned.endsWith("0") || !hasSuspiciousPartialZeroTail(cleaned)) cleaned
     else cleaned.dropRight(1) + "?"
-  }
 
   /** Usable-card gate — suppress gibberish in explicit card mode. */
   def isUsableCardCapture(text: String): Boolean = {

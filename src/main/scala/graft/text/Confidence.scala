@@ -8,14 +8,11 @@ package graft.text
   */
 object Confidence {
 
-  private val Markers = List(
+  // substring semantics (`mk in lower`): matched by the same
+  // Aho-Corasick pass as CardIntel's keywords (TextProfile.keywordHits)
+  private[text] val Markers = IndexedSeq(
     "date", "fecha", "total", "invoice", "factura", "name", "nombre", "id",
     "dni", "tax", "iva")
-
-  // substring semantics (`mk in lower`), one Aho-Corasick pass instead
-  // of 11 full `contains` scans (the markers were the dominant cost of
-  // this scorer: 11 × text length per doc)
-  private val markerAc = AhoCorasick.build(Markers.toIndexedSeq)
 
   // \b[a-zA-ZáéíóúüñÁÉÍÓÚÜÑ]{2,}\b — confidence.py:45. Counted by a
   // hand-rolled scan: a match is exactly a maximal \w-run that lies
@@ -26,11 +23,11 @@ object Confidence {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
       "áéíóúüñÁÉÍÓÚÜÑ".indexOf(c) >= 0
 
-  private[text] def countWords(text: String): Int = {
+  private[text] def countWords(text: String, limit: Int = Int.MaxValue): Int = {
     var count = 0
     var i = 0
     val n = text.length
-    while (i < n) {
+    while (i < n && count < limit) {
       if (isRegexWordChar(text.charAt(i))) {
         val start = i
         var allInClass = true
@@ -45,29 +42,25 @@ object Confidence {
   }
 
   def calculate(text: String): Double =
-    if (text == null) 0.0 else calculateLower(text, text.toLowerCase)
+    if (text == null) 0.0 else fromProfile(TextProfile(text))
 
   /** calculate() with a caller-provided lowercase copy. */
-  def calculateLower(text: String, lowerIn: String): Double = {
-    if (text == null || pyStrip(text).isEmpty) return 0.0
+  def calculateLower(text: String, lowerIn: String): Double =
+    if (text == null) 0.0 else fromProfile(TextProfile(text, lowerIn))
 
-    var alnum = 0
-    var i = 0
-    while (i < text.length) {
-      if (isPyAlnum(text.charAt(i))) alnum += 1
-      i += 1
-    }
-    val density = alnum.toDouble / text.length
+  /** From the text's profile: its alnum count and keyword hits. */
+  def fromProfile(p: TextProfile): Double = {
+    val text = p.text
+    if (text.isEmpty || (!p.stripped && pyStrip(text).isEmpty)) return 0.0
 
-    val wordCount = countWords(text)
+    val density = p.alnum.toDouble / text.length
+    // only min(words / 10, 1) is used: counting stops at 10
+    val wordCount = countWords(text, 10)
 
-    val hits = markerAc.matchedSet(lowerIn)
+    val hits = p.keywordHits
     var markerScore = 0.0
-    var m = 0
-    while (m < hits.length) {
-      if (hits(m)) markerScore += 0.05
-      m += 1
-    }
+    var m = CardIntel.MarkerBase // the markers are the last hit ids
+    while (m < hits.length) { if (hits(m)) markerScore += 0.05; m += 1 }
     markerScore = math.min(0.2, markerScore)
 
     val lengthFactor = math.min(1.0, text.length / 100.0)

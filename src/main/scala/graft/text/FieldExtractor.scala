@@ -412,11 +412,7 @@ object FieldExtractor {
     * literal prefilter (skips regexes that cannot match; identical
     * results, far fewer full-text scans). */
   def tryPatterns(text: String, patterns: List[Gated]): Option[String] =
-    tryPatternsLower(text, text.toLowerCase, patterns)
-
-  def tryPatternsLower(text: String, lower: String,
-      patterns: List[Gated]): Option[String] =
-    tryPatternsLower(text, lower, patterns, graft.text.maxDigitRun(text))
+    tryPatternsLower(text, text.toLowerCase, patterns, graft.text.maxDigitRun(text))
 
   /** Leftmost match by probing ONLY gate-literal positions (see
     * [[Gated]] `anchored`). Transparent bounds make \b and lookbehinds
@@ -551,22 +547,28 @@ object FieldExtractor {
     * personal_doc_extractor.py:470-508 */
   def extract(text: String, documentType: String,
       runYear: Int = DefaultRunYear): (List[FieldRow], List[String]) =
-    extractLower(text, text.toLowerCase, documentType, runYear)
+    extract(TextProfile(text), documentType, runYear)
 
-  /** extract() with a caller-provided lowercase copy. */
+  /** extract() with the caller-precomputed fold-safety verdict. */
   def extractLower(text: String, lower: String, documentType: String,
-      runYear: Int = DefaultRunYear): (List[FieldRow], List[String]) =
-    extractLower(text, lower, documentType, runYear,
-      lower.length == text.length && !graft.text.hasFoldDivergent(text))
+      runYear: Int, foldSafe: Boolean): (List[FieldRow], List[String]) =
+    if (GenericDocTypes.contains(documentType)) (Nil, Nil)
+    else extract(text, lower, documentType, runYear, foldSafe,
+      graft.text.maxDigitRun(text))
 
-  /** extractLower() with the caller-precomputed fold-safety verdict. */
-  def extractLower(text: String, lower: String, documentType: String,
-      runYear: Int, foldSafe: Boolean): (List[FieldRow], List[String]) = {
+  /** extract() from the text's profile: its lowercase copy, fold-safety
+    * verdict and longest digit run. */
+  def extract(p: TextProfile, documentType: String,
+      runYear: Int): (List[FieldRow], List[String]) =
+    extract(p.text, p.lower, documentType, runYear, p.foldSafe, p.maxDigitRun)
+
+  private def extract(text: String, lower: String, documentType: String,
+      runYear: Int, foldSafe: Boolean,
+      runLen: Int): (List[FieldRow], List[String]) = {
     if (GenericDocTypes.contains(documentType)) return (Nil, Nil)
     val definitions =
       FieldDefinitions.getOrElse(documentType, FieldDefinitions("id_document"))
 
-    val runLen = graft.text.maxDigitRun(text)
     val fields = List.newBuilder[FieldRow]
     val warnings = List.newBuilder[String]
     definitions.foreach { d =>

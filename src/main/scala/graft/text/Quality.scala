@@ -91,24 +91,6 @@ object Quality {
   private[text] def txnLikePattern: java.util.regex.Pattern = txnLike
   private[text] def currencyPattern: java.util.regex.Pattern = currency
 
-  private def alnumRatio(text: String): Double = {
-    if (text.isEmpty) return 0.0
-    var n = 0; var i = 0
-    while (i < text.length) { if (isPyAlnum(text.charAt(i))) n += 1; i += 1 }
-    n.toDouble / math.max(text.length, 1)
-  }
-
-  private def printableRatio(text: String): Double = {
-    if (text.isEmpty) return 0.0
-    var n = 0; var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if ((c > 31 && c < 127) || c == '\n' || c == '\r' || c == '\t') n += 1
-      i += 1
-    }
-    n.toDouble / math.max(text.length, 1)
-  }
-
   private def bankStatementHits(text: String, lower: String,
       aligned: Boolean): Int =
     (if (hasW(lower, accountAlts, accountLike, text, aligned)) 1 else 0) +
@@ -131,19 +113,27 @@ object Quality {
   def evaluate(rawText: String, documentType: String): QualityResult =
     evaluate(rawText, documentType, foldSafeHint = None)
 
-  /** Variant with the caller-precomputed fold-safety verdict (one scan
-    * per document across all keyword operators). Valid because
-    * `pyStrip` only removes whitespace, which always lowercases 1:1 and
-    * is never fold-divergent — foldSafe(raw) == foldSafe(stripped). */
+  /** Variant with the caller-precomputed fold-safety verdict. Valid
+    * because `pyStrip` only removes whitespace, which always lowercases
+    * 1:1 and is never fold-divergent — foldSafe(raw) == foldSafe(stripped). */
   def evaluate(rawText: String, documentType: String,
-      foldSafeHint: Option[Boolean]): QualityResult = {
+      foldSafeHint: Option[Boolean]): QualityResult =
     // Python str.strip() semantics (Unicode whitespace), see pyStrip
-    val text = pyStrip(if (rawText == null) "" else rawText)
+    evaluate(TextProfile(pyStrip(if (rawText == null) "" else rawText)),
+      documentType, foldSafeHint)
+
+  /** From a text's profile: the ratios come from its counts, and the
+    * doc-type signals read its lowercase copy. A profile of a text that
+    * `pyStrip` would change is re-taken over the stripped text. */
+  def evaluate(p: TextProfile, documentType: String,
+      foldSafeHint: Option[Boolean] = None): QualityResult = {
+    if (!p.stripped) return evaluate(p.text, documentType, foldSafeHint)
+    val text = p.text
     if (text.isEmpty)
       return QualityResult(0.0, "UNUSABLE", Seq("EMPTY_TEXT"))
 
-    val alnum = alnumRatio(text)
-    val printable = printableRatio(text)
+    val alnum = p.alnum.toDouble / text.length
+    val printable = p.printable.toDouble / text.length
     val lengthScore = math.min(text.length / 700.0, 1.0)
 
     val baseScore = 0.35 * lengthScore + 0.35 * alnum + 0.30 * printable
@@ -155,12 +145,12 @@ object Quality {
     // doc-type signal bonuses, open_source_ocr_stack.py:119-147
     if (docType == "bank_statement" || docType == "loan_application" ||
         docType == "kyc_form" || docType == "receipt" || docType == "invoice") {
-      val lower = text.toLowerCase
-      // length check catches 1:2 lowercasing; hasFoldDivergent catches
-      // same-length divergence (incl. U+212A Kelvin → 'k', which would
-      // false-positive the probe copy vs these ASCII-CI patterns)
-      val aligned = foldSafeHint.getOrElse(
-        lower.length == text.length && !graft.text.hasFoldDivergent(text))
+      val lower = p.lower
+      // the length check catches 1:2 lowercasing; the fold-divergence
+      // scan catches same-length divergence (incl. U+212A Kelvin → 'k',
+      // which would false-positive the probe copy vs these ASCII-CI
+      // patterns)
+      val aligned = foldSafeHint.getOrElse(p.foldSafe)
       if (docType == "bank_statement") {
         val hits = bankStatementHits(text, lower, aligned)
         if (hits < 2) reasons += "BANK_STATEMENT_SIGNALS_WEAK"

@@ -102,68 +102,117 @@ object Sanitizer {
   private def normalizeSpan(span: String): String =
     collapseWsStrip(spanSepRun.matcher(span).replaceAll(" "))
 
+  /** Phase-1 text with its [[digitStats]]. */
+  private[text] final case class Phase1(text: String, digits: Int,
+      maxRun: Int, maxSpanDigits: Int)
+
+  // what phase 1 needs to know of a char, as bits: kept by the filter,
+  // regex whitespace, digit, longDigitSpan separator, surrogate half
+  private final val Keep = 1
+  private final val Ws = 2
+  private final val Digit = 4
+  private final val Sep = 8
+  private final val Surrogate = 16
+
+  private def classOf(c: Char): Int =
+    if (Character.isSurrogate(c)) Surrogate
+    else (if (c > 127 || allowedAscii(c)) Keep else 0) |
+      (if (isRegexWs(c)) Ws else 0) | (if (isPyDigit(c)) Digit else 0) |
+      (if (isSpanSep(c)) Sep else 0)
+
+  private val asciiClass: Array[Int] = Array.tabulate(128)(i => classOf(i.toChar))
+
+  @inline private def charClass(c: Char): Int =
+    if (c < 128) asciiClass(c) else classOf(c)
+
+  /** [[digitStats]] fed one char class at a time. */
+  private final class DigitStats {
+    var digits = 0; var run = 0; var maxRun = 0; var span = 0; var maxSpan = 0
+    def see(k: Int): Unit =
+      if ((k & Digit) != 0) {
+        digits += 1
+        run += 1; if (run > maxRun) maxRun = run
+        span += 1; if (span > maxSpan) maxSpan = span
+      } else {
+        run = 0
+        if ((k & (Sep | Ws)) == 0) span = 0
+      }
+    def phase1(text: String): Phase1 = Phase1(text, digits, maxRun, maxSpan)
+  }
+
+  private[text] def scrubFilterCollapse(s: String): String = phase1(s).text
+
+  /** After a plain kept char (class exactly Keep: no ws, digit or
+    * separator), the end of the plain ASCII run from `i`: those chars
+    * are kept as they are and leave the digit counters reset. */
+  @inline private def skipPlain(s: String, from: Int, k: Int): Int = {
+    var i = from
+    if (k == Keep)
+      while (i < s.length && s.charAt(i) < 128 && asciiClass(s.charAt(i)) == Keep) i += 1
+    i
+  }
+
   /** Fused first phase of sanitize — byte-identical to the sequential
     * `dropUnpairedSurrogates` → allowed-ASCII filter → `collapseWsStrip`
-    * composition, in ONE detection pass + at most ONE build pass
-    * (sequential staging cost three scans and an intermediate string;
-    * the "\n\n" block joins mean collapse rebuilt on nearly every doc).
-    * A char dropped by an earlier stage simply never reaches the
-    * collapse automaton, which is exactly the sequential semantics. */
-  private[text] def scrubFilterCollapse(s: String): String = {
+    * composition followed by [[digitStats]] of the result, in ONE
+    * detection pass + at most ONE build pass that copies the kept runs
+    * in bulk (sequential staging cost four scans and an intermediate
+    * string; the "\n\n" block joins mean collapse rebuilt on nearly
+    * every doc). A char dropped by an earlier stage simply never reaches
+    * the collapse automaton, which is exactly the sequential semantics. */
+  private[text] def phase1(s: String): Phase1 = {
     // fast path: nothing dropped, no collapsible/strippable ws, no
     // unpaired surrogate → the input IS the answer
+    val n = s.length
+    val seen = new DigitStats
     var clean = true
     var i = 0
-    val n = s.length
     while (clean && i < n) {
       val c = s.charAt(i)
-      if (c <= 127) {
-        if (!allowedAscii(c)) clean = false
-        else if (c == '\n' || c == '\t') clean = false // regex-ws ≠ ' '
-        else if (c == ' ' && (i == 0 || i + 1 >= n ||
-          isRegexWs(s.charAt(i + 1)))) clean = false // run/edge space
-      } else if (Character.isHighSurrogate(c)) {
-        if (i + 1 >= n || !Character.isLowSurrogate(s.charAt(i + 1)))
-          clean = false
-        else i += 1 // skip the low half of a valid pair
-      } else if (Character.isLowSurrogate(c)) clean = false
-      else if (isRegexWs(c)) clean = false // non-space unicode ws
-      i += 1
+      val k = charClass(c)
+      seen.see(k) // a valid pair's skipped low half resets the same counters
+      if ((k & Surrogate) != 0) {
+        if (Character.isHighSurrogate(c) && i + 1 < n &&
+            Character.isLowSurrogate(s.charAt(i + 1))) i += 1 // valid pair
+        else clean = false
+      } else if ((k & Keep) == 0) clean = false // filtered ASCII
+      else if ((k & Ws) != 0 && (c != ' ' || i == 0 || i + 1 >= n ||
+          isRegexWs(s.charAt(i + 1)))) clean = false // not a lone inner ' '
+      i = skipPlain(s, i + 1, k)
     }
-    if (clean) return s
+    if (clean) return seen.phase1(s)
 
-    val sb = new java.lang.StringBuilder(n)
+    val st = new DigitStats
+    val out = new Array[Char](n) // kept runs land via bulk getChars
+    var len = 0
     var pendingSpace = false
+    var from = -1 // start of the kept run not yet copied, -1 when none
     i = 0
     while (i < n) {
       val c = s.charAt(i)
-      var keep = true
-      var advance = 1
-      if (Character.isHighSurrogate(c)) {
-        if (i + 1 < n && Character.isLowSurrogate(s.charAt(i + 1))) {
-          // valid pair: both halves pass the >127 filter, never ws
-          if (pendingSpace && sb.length() > 0) sb.append(' ')
+      val k = charClass(c)
+      // a valid pair passes the >127 filter and is never ws
+      val pair = (k & Surrogate) != 0 && Character.isHighSurrogate(c) &&
+        i + 1 < n && Character.isLowSurrogate(s.charAt(i + 1))
+      if (!pair && (k & (Keep | Ws)) != Keep) {
+        if (from >= 0) { s.getChars(from, i, out, len); len += i - from; from = -1 }
+        // unpaired surrogates and filtered ASCII are dropped; kept ws
+        // becomes one space before the next kept char (none at either
+        // edge), and everything kept so far is in `out`
+        if ((k & Keep) != 0) pendingSpace = len > 0
+        i += 1
+      } else {
+        if (from < 0) {
+          if (pendingSpace) { out(len) = ' '; len += 1; st.see(Ws) }
           pendingSpace = false
-          sb.append(c).append(s.charAt(i + 1))
-          advance = 2
-        } // else: unpaired high — dropped
-        keep = false // handled above
-      } else if (Character.isLowSurrogate(c)) {
-        keep = false // unpaired low — dropped
-      } else if (c <= 127 && !allowedAscii(c)) {
-        keep = false // filtered ASCII
-      }
-      if (keep) {
-        if (isRegexWs(c)) pendingSpace = true
-        else {
-          if (pendingSpace && sb.length() > 0) sb.append(' ')
-          pendingSpace = false
-          sb.append(c)
+          from = i
         }
+        st.see(k)
+        i = if (pair) i + 2 else skipPlain(s, i + 1, k)
       }
-      i += advance
     }
-    sb.toString // trailing pendingSpace never flushed == strip
+    if (from >= 0) { s.getChars(from, n, out, len); len += n - from }
+    st.phase1(new String(out, 0, len)) // a trailing pendingSpace is never flushed == strip
   }
 
   /** `sanitize_text` — UTF-8 scrub → allowed-char filter → whitespace
@@ -171,19 +220,19 @@ object Sanitizer {
     * separator strip → 10k truncation with "...". */
   def sanitize(text: String): String = {
     if (text == null || text.isEmpty) return ""
-    var s = scrubFilterCollapse(text)
+    val p1 = phase1(text)
+    var s = p1.text
 
-    // necessary-condition gates, one fused pass (none of the rules adds
+    // necessary-condition gates, taken by phase 1 (none of the rules adds
     // or removes digits, so the stats stay valid throughout):
     //  - longDigitSpan needs ≥11 digits inside ONE run of span chars
     //    (digits + its separator class + \s) — `maxSpanDigits`; a bare
     //    total-digit count lets date/amount-rich receipts pay the
     //    {11,19} quantifier scan for nothing
     //  - pairSep/trailingSep both open with \d{3,4} — `maxRun ≥ 3`
-    val (nDigits, maxRun, maxSpanDigits) = digitStats(s)
 
     // long digit spans: separators → spaces within the span
-    if (maxSpanDigits >= 11) {
+    if (p1.maxSpanDigits >= 11) {
       val m: Matcher = longDigitSpan.matcher(s)
       if (m.find()) {
         val sb = new java.lang.StringBuilder(s.length)
@@ -196,14 +245,14 @@ object Sanitizer {
     }
 
     // fixpoint: dddd-dddd → dddd dddd
-    if (nDigits >= 6 && maxRun >= 3) {
+    if (p1.digits >= 6 && p1.maxRun >= 3) {
       var previous = ""
       while (previous != s) {
         previous = s
         s = pairSep.matcher(s).replaceAll("$1 $2")
       }
     }
-    if (nDigits >= 3 && maxRun >= 3) s = trailingSep.matcher(s).replaceAll("$1")
+    if (p1.digits >= 3 && p1.maxRun >= 3) s = trailingSep.matcher(s).replaceAll("$1")
 
     if (s.length > MaxLen) s.substring(0, MaxLen) + "..." else s
   }
@@ -220,7 +269,7 @@ object Sanitizer {
     * longDigitSpan match lies inside one maximal run of
     * digit/separator/\s chars, so `maxSpanDigits < 11` proves no match
     * exists — exact necessary conditions, never behavior changes. */
-  private def digitStats(s: String): (Int, Int, Int) = {
+  private[text] def digitStats(s: String): (Int, Int, Int) = {
     var n = 0
     var run = 0; var maxRun = 0
     var spanDigits = 0; var maxSpan = 0

@@ -21,6 +21,14 @@ package graft
   * adversarial-exotic (the reference's own OCR route can't even emit
   * them — its recognizer alphabet is BMP). RegexParitySpec pins the
   * divergence explicitly so a future contract change is a conscious one.
+  *
+  * ONE SCAN PER DOCUMENT: the operators `Extractor.finish` runs
+  * (CardIntel, FieldExtractor, Confidence, Quality, LangHints) read the
+  * document's [[TextProfile]] — its counts, longest digit run, lowercase
+  * copy, fold-safety verdict and keyword hits — and must not rescan the
+  * text for any of them. A new per-document count belongs in the
+  * profile's one pass; the String-taking entry points build a profile
+  * of their own.
   */
 package object text {
 
@@ -32,11 +40,20 @@ package object text {
       .doubleValue()
   }
 
+  // The per-char classes below answer ASCII from its ranges and defer
+  // to `Character` above it; CharClassSpec checks all 65,536 BMP chars
+  // against the plain `Character` definitions.
+
   /** Python str.isdigit() per char (Unicode decimal digits). */
-  @inline def isPyDigit(c: Char): Boolean = Character.isDigit(c)
+  @inline def isPyDigit(c: Char): Boolean =
+    if (c < 0x80) c >= '0' && c <= '9' else Character.isDigit(c)
+
+  @inline private def isAsciiAlnum(c: Char): Boolean =
+    (c >= '0' && c <= '9') || ((c | 0x20) >= 'a' && (c | 0x20) <= 'z')
 
   /** Python str.isalnum() per char (letters or digits, Unicode). */
-  @inline def isPyAlnum(c: Char): Boolean = Character.isLetterOrDigit(c)
+  @inline def isPyAlnum(c: Char): Boolean =
+    if (c < 0x80) isAsciiAlnum(c) else Character.isLetterOrDigit(c)
 
   /** Python str.isspace() per char. */
   @inline def isPySpace(c: Char): Boolean =
@@ -77,46 +94,59 @@ package object text {
   def uPattern(regex: String, flags: Int = 0): Pattern =
     Pattern.compile(regex, flags | Pattern.UNICODE_CHARACTER_CLASS)
 
-  private val wsRun = uPattern("\\s+")
-
   /** Exactly the char set Java regex `\s` matches under
     * UNICODE_CHARACTER_CLASS (Unicode White_Space) — NOT the same as
     * `Character.isWhitespace` (which excludes NEL/NBSP-family chars).
     * Kept in sync by the RegexParitySpec fuzz test. */
   @inline def isRegexWs(c: Char): Boolean =
-    (c >= 0x09 && c <= 0x0d) || c == ' ' || c == 0x85 || c == 0xa0 ||
-      c == 0x1680 || (c >= 0x2000 && c <= 0x200a) || c == 0x2028 ||
-      c == 0x2029 || c == 0x202f || c == 0x205f || c == 0x3000
+    if (c <= ' ') c == ' ' || (c >= 0x09 && c <= 0x0d)
+    else c >= 0x85 && (c == 0x85 || c == 0xa0 || c == 0x1680 ||
+      (c >= 0x2000 && c <= 0x200a) || c == 0x2028 || c == 0x2029 ||
+      c == 0x202f || c == 0x205f || c == 0x3000)
 
-  /** re.sub(r"\s+", " ", s) with Unicode whitespace. Hand-rolled single
-    * pass with a zero-copy fast path (already-collapsed input — the
-    * common case on the sanitize→analyze hot path — returns `s` itself). */
-  def collapseWs(s: String): String = {
-    var i = 0
-    val n = s.length
-    var clean = true
-    while (i < n && clean) {
-      val c = s.charAt(i)
-      if (isRegexWs(c) && (c != ' ' || (i + 1 < n && isRegexWs(s.charAt(i + 1)))))
-        clean = false
-      i += 1
-    }
-    if (clean) return s
-    val sb = new java.lang.StringBuilder(n)
-    i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (isRegexWs(c)) {
-        sb.append(' ')
-        i += 1
-        while (i < n && isRegexWs(s.charAt(i))) i += 1
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
+  /** re.sub(r"\s+", " ", s) with Unicode whitespace. */
+  def collapseWs(s: String): String = collapseRange(s, 0, s.length)
+
+  /** re.sub(r"\s+", " ", s).strip() (Java `trim`: chars <= ' '). The
+    * edge runs of whitespace and control chars are exactly what the
+    * collapse-then-trim drops, so only the range between them is
+    * collapsed. */
+  def collapseWsStrip(s: String): String = {
+    var a = 0
+    var b = s.length
+    while (a < b && (s.charAt(a) <= ' ' || isRegexWs(s.charAt(a)))) a += 1
+    while (b > a && (s.charAt(b - 1) <= ' ' || isRegexWs(s.charAt(b - 1)))) b -= 1
+    collapseRange(s, a, b)
   }
 
-  /** re.sub(r"\s+", " ", s).strip() */
-  def collapseWsStrip(s: String): String = collapseWs(s).trim
+  /** collapseWs of `s[a, b)`: one scan that copies the runs between
+    * whitespace in bulk, and no copy at all when nothing collapses (the
+    * common case on the sanitize→analyze hot path returns `s` itself). */
+  private def collapseRange(s: String, a: Int, b: Int): String = {
+    var out: Array[Char] = null // getChars copies in bulk; the JDK 17
+    var len = 0 // StringBuilder.append(CharSequence, …) goes char by char
+    var from = a // first char not yet copied
+    var i = a
+    while (i < b) {
+      if (isRegexWs(s.charAt(i))) {
+        var j = i + 1
+        while (j < b && isRegexWs(s.charAt(j))) j += 1
+        if (j - i > 1 || s.charAt(i) != ' ') {
+          if (out == null) out = new Array[Char](b - a)
+          s.getChars(from, i, out, len)
+          len += i - from
+          out(len) = ' '; len += 1
+          from = j
+        }
+        i = j
+      } else i += 1
+    }
+    if (out != null) {
+      s.getChars(from, b, out, len)
+      new String(out, 0, len + b - from)
+    } else if (a == 0 && b == s.length) s
+    else s.substring(a, b)
+  }
 
   /** Python str.strip(): strips Unicode whitespace at both ends
     * (Java's String.trim is ASCII-only). */
@@ -149,7 +179,8 @@ package object text {
     * [\p{Alpha}\p{gc=Mn}\p{gc=Me}\p{gc=Mc}\p{Digit}\p{gc=Pc}\p{Join_Control}].
     * Kept in sync by the RegexParitySpec fuzz test. */
   @inline def isRegexWordChar(c: Char): Boolean = {
-    if (Character.isAlphabetic(c) || Character.isDigit(c)) true
+    if (c < 0x80) isAsciiAlnum(c) || c == '_'
+    else if (Character.isAlphabetic(c) || Character.isDigit(c)) true
     else {
       val t = Character.getType(c)
       t == Character.NON_SPACING_MARK || t == Character.ENCLOSING_MARK ||
@@ -172,10 +203,20 @@ package object text {
     * Fast-path scanners fall back to the real Pattern when any such
     * char is present — the fallback is always-correct, just slower. */
   @inline def isFoldDivergent(c: Char): Boolean =
-    c >= 0x80 && {
-      val lo = Character.toLowerCase(c)
-      lo != Character.toLowerCase(Character.toUpperCase(c)) || lo < 0x80
+    (FoldDivergent(c >>> 6) & (1L << c)) != 0
+
+  /** [[isFoldDivergent]] as a bitmap over the BMP, built once. */
+  private val FoldDivergent: Array[Long] = {
+    val bits = new Array[Long](1024)
+    var c = 0x80
+    while (c <= 0xffff) {
+      val lo = Character.toLowerCase(c.toChar)
+      if (lo != Character.toLowerCase(Character.toUpperCase(c.toChar)) || lo < 0x80)
+        bits(c >>> 6) |= 1L << c
+      c += 1
     }
+    bits
+  }
 
   /** Any fold-divergent char in `s` (scan the ORIGINAL text — Kelvin K
     * is invisible in the lowercase copy). */
